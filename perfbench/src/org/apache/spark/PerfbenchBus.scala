@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every queued listener event has been delivered, so a pass's
+  * counters are complete before they are read.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
